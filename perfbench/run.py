@@ -15,6 +15,7 @@ stage counters). See README.md.
 from __future__ import annotations
 
 import argparse
+import gc
 import json
 import math
 import os
@@ -39,9 +40,15 @@ def _import_engine():
 
 
 def _host_env(tmp: str) -> None:
-    """Session settings for this host: all CPUs, ~60% of RAM for the
-    driver heap, and every scratch path under the private temp root."""
-    cpus = len(os.sched_getaffinity(0))
+    """Session settings for this host: half the CPUs for Spark's task
+    threads, ~60% of RAM for the driver heap, and every scratch path
+    under the private temp root.
+
+    The other half is left to the Python driver, the JIT compiler and
+    the GC threads: with ``local[nproc]`` those compete with the task
+    threads, and on a shared host a busy neighbour then slowed a run
+    by 1.6x, against 1.25x with half the CPUs."""
+    cpus = max(1, len(os.sched_getaffinity(0)) // 2)
     with open("/proc/meminfo") as f:
         mem_kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
     for d in ("local", "java", "py", "warehouse"):
@@ -157,6 +164,9 @@ def main() -> int:
             sys.exit(f"perfbench: unknown workload {args.workload!r}; one of {sorted(W.WORKLOADS)}")
         b = W.Bench(tmp, args.seed)
         wl = W.WORKLOADS[args.workload](b)  # input generation, not timed
+        # the inputs and ground truth are millions of objects; keep the
+        # cyclic GC from walking them again at random points inside ops
+        gc.freeze()
         print(f"  # inputs generated in {time.perf_counter() - t_start:.1f} s", file=sys.stderr)
 
         t0 = time.perf_counter()
@@ -167,6 +177,7 @@ def main() -> int:
         if term[0]:
             sys.exit(143)
         b.spark, b.tracer = spark, Tracer(spark.sparkContext, traced)
+        b.watch_jvm(_jvm_proc().pid)
         if traced:
             for module, attr, name, cm in W.NESTED:
                 b.tracer.wrap(module, attr, name, cm)
@@ -184,13 +195,14 @@ def main() -> int:
         b.measuring = False
         wl.cycle(0)
         b.measuring = True
-        cycle_s, traced_s, plain_s = [], [], []
+        cycle_s, cycle_cpu, traced_s, plain_s = [], [], [], []
         t_loop, c = time.perf_counter(), 1
         while c <= (4 if traced else 2) or time.perf_counter() - t_loop < args.seconds:
             b.trace_cycle = traced and c in (2, 3)
-            w0, f0 = b.loop_wall, b.failed
+            w0, c0, f0 = b.loop_wall, b.loop_cpu, b.failed
             wl.cycle(c)
             cycle_s.append(b.loop_wall - w0 if b.failed == f0 else math.inf)
+            cycle_cpu.append(b.loop_cpu - c0 if b.failed == f0 else math.inf)
             (traced_s if b.trace_cycle else plain_s).append(cycle_s[-1])
             c += 1
             if b.failed > 50:
@@ -215,9 +227,14 @@ def main() -> int:
             })
         end_to_end = {
             "setup_s": start_s + sum(b.setup_parts.values()),
+            "cycle_cpu_s": statistics.median(cycle_cpu),
+            "read_cpu_ms_p50": 1e3 * statistics.median(b.cpu.get("read", [math.inf])),
+        }
+        # wall times: printed, not gated (they follow the host's load)
+        b.report.update({
             "cycle_s": statistics.median(cycle_s),
             "read_ms_p50": 1e3 * statistics.median(b.lat.get("read", [math.inf])),
-        }
+        })
     finally:
         try:
             if "pyspark" in sys.modules:
@@ -232,11 +249,14 @@ def main() -> int:
     print(f"  # total {time.perf_counter() - t_start:.1f} s", file=sys.stderr)
     print(f"workload={args.workload} seed={args.seed} trace={args.trace} cycles={c} "
           f"loop_s={time.perf_counter() - t_loop:.1f}")
+    units = {m["name"]: " " + m["unit"] for m in spec["end_to_end"]}
     for k, v in {**end_to_end, **b.setup_parts, **b.report}.items():
-        print(f"  {k} = {v:.6g}")
+        print(f"  {k} = {v:.6g}{units.get(k, '')}")
     print(f"  ops_failed_share = {b.failed / b.attempted:.6g} ({b.failed} of {b.attempted})")
     for k, v in b.lat.items():
         print(f"  # {k}: " + " ".join(f"{x:.2f}" for x in v), file=sys.stderr)
+    for k, v in b.cpu.items():
+        print(f"  # {k} cpu: " + " ".join(f"{x:.2f}" for x in v), file=sys.stderr)
     for e in b.errors[:20]:
         print(f"  FAILED {e}")
 

@@ -56,6 +56,9 @@ IVF_RECALL_FLOOR = 0.8
 IVF_ITERS = 2
 BPE_MERGES = 4
 
+# JVM thread names (as /proc shows them) of the JIT compiler and the GC
+_JIT_GC_THREADS = ("C1 Compiler", "C2 Compiler", "Sweeper thread", "GC Thread", "G1 ")
+
 
 class CheckFailed(Exception):
     pass
@@ -92,7 +95,44 @@ class Bench:
         self.report: dict[str, float] = {}
         self.setup_parts: dict[str, float] = {}
         self.loop_wall = 0.0
+        self.cpu: dict[str, list[float]] = {}
+        self.loop_cpu = 0.0
+        self._jvm_task = self._jvm_clock = None
+        self._excluded: dict[str, bool] = {}  # JVM thread id -> JIT or GC thread
+        self._excluded_ns: dict[str, int] = {}  # last CPU reading of each such thread
         self._count: dict[str, int] = {}
+
+    def watch_jvm(self, pid: int) -> None:
+        self._jvm_task = f"/proc/{pid}/task"
+        self._jvm_clock = ((~pid) << 3) | 2  # the kernel's CPU clock of the whole process
+
+    def cpu_s(self) -> float:
+        """CPU seconds the engine has used so far: this process plus the
+        JVM without its JIT compiler and GC threads. Time the hypervisor
+        steals is not counted, so this does not swing with the host's
+        load the way wall time does. Compiling and collecting run in
+        bursts at points no op controls, so they are left out."""
+        if self._jvm_clock is None:
+            return 0.0
+        for tid in os.listdir(self._jvm_task):
+            excluded = self._excluded.get(tid)
+            if excluded is None:
+                try:
+                    with open(f"{self._jvm_task}/{tid}/comm") as f:
+                        name = f.read()
+                except OSError:
+                    continue
+                excluded = name.startswith(_JIT_GC_THREADS)
+                if not name.startswith("java"):  # a thread may not be named yet
+                    self._excluded[tid] = excluded
+            if excluded:
+                try:
+                    with open(f"{self._jvm_task}/{tid}/schedstat") as f:
+                        self._excluded_ns[tid] = int(f.read().split()[0])
+                except OSError:
+                    pass  # exited: its last reading stands
+        jvm = time.clock_gettime(self._jvm_clock) - sum(self._excluded_ns.values()) / 1e9
+        return time.process_time() + jvm
 
     def note(self, key: str, value: float) -> None:
         self.extra.setdefault(key, []).append(value)
@@ -106,29 +146,34 @@ class Bench:
         self._count[kind] = n + 1
         self.tracer.active = self.tracer.enabled and (not loop or self.trace_cycle)
         self.tracer.op = f"{kind}-{n}"
-        t = time.perf_counter()
-        wall = 0.0
+        t, c = time.perf_counter(), self.cpu_s()
+        wall = cpu = 0.0
         try:
             out = fn()
             dt = wall = time.perf_counter() - t
+            dc = cpu = self.cpu_s() - c
             if check is not None:
                 check(out)
         except Exception as e:  # noqa: BLE001 - any failure is a failed op
             wall = wall or time.perf_counter() - t
-            dt = math.inf
+            cpu = cpu or self.cpu_s() - c
+            dt = dc = math.inf
             detail = "".join(traceback.format_exception_only(type(e), e)).strip()
             self.errors.append(f"{kind}#{n}: {detail[:300]}")
         finally:
             self.tracer.active = self.tracer.enabled
         if self.measuring or not loop:
             self.lat.setdefault(kind, []).append(dt)
+            self.cpu.setdefault(kind, []).append(dc)
         if loop:
             self.loop_wall += wall
+            self.loop_cpu += cpu
 
     def read(self, kind: str) -> None:
         """Count the last ``kind`` op as a read sample."""
         if self.measuring:
             self.lat.setdefault("read", []).append(self.lat[kind][-1])
+            self.cpu.setdefault("read", []).append(self.cpu[kind][-1])
 
     def median(self, kind: str) -> float:
         v = self.lat.get(kind)
@@ -189,13 +234,16 @@ class IndexRW:
         b.setup_parts = {"seed_s": b.median("seed"), "doc_tables_s": b.lat["doc_tables"][-1]}
         b.report["index_docs_per_s"] = N_DOCS / b.median("seed")
 
-    # one cycle: ingest, probe, takedown, probe, query, bm25
+    # one cycle: ingest, probe, takedown, probe, two lookups, bm25.
+    # Term counts rotate through 1-4 by position, not by draw, so every
+    # run has the same query shapes and only the terms depend on the seed.
     def cycle(self, c: int) -> None:
         rng = gen.rng_for(self.b.seed, 100, c)
         self.ingest(rng, c)
         self.takedown(rng)
-        self.query(rng)
-        self.bm25(rng)
+        self.query(rng, 1 + (2 * c) % 4)
+        self.query(rng, 1 + (2 * c + 1) % 4)
+        self.bm25(rng, 1 + (c + 1) % 4)
 
     def _lookup(self, terms: "list[str]", kind: str) -> None:
         b, t, spark = self.b, self.b.tracer, self.b.spark
@@ -213,8 +261,8 @@ class IndexRW:
         b.op(kind, run, check)
         b.read(kind)
 
-    def query(self, rng) -> None:
-        ranks = self.vocab.draw_content_ranks(rng, int(rng.integers(1, 5)))
+    def query(self, rng, n_terms: int) -> None:
+        ranks = self.vocab.draw_content_ranks(rng, n_terms)
         self.n_query_terms += len(ranks)
         self.n_head_queries += int(np.sum(ranks < self.vocab.n_head + HEAD_TERMS))
         self._lookup(sorted({self.vocab.words[r] for r in ranks}), "lookup")
@@ -277,10 +325,9 @@ class IndexRW:
         pick = rng.choice(len(dead_terms), size=min(4, len(dead_terms)), replace=False)
         self._lookup([dead_terms[i] for i in sorted(pick)], "probe")
 
-    def bm25(self, rng) -> None:
+    def bm25(self, rng, n_terms: int) -> None:
         b, t, spark = self.b, self.b.tracer, self.b.spark
-        terms = sorted({self.vocab.words[r] for r in
-                        self.vocab.draw_content_ranks(rng, int(rng.integers(1, 5)))})
+        terms = sorted({self.vocab.words[r] for r in self.vocab.draw_content_ranks(rng, n_terms)})
 
         def run():
             df = t.call("term_queries.bm25_rank", TQ.bm25_rank, None, terms, k=10,
